@@ -29,7 +29,7 @@ object Main {
     var examples = false
     var force = false
     var verbose = false
-    var concurrency = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    var concurrency = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     var i = 0
     def value(flag: String): String = {
       if (i + 1 >= args.length) {
@@ -41,7 +41,8 @@ object Main {
       args(i) match {
         case f @ ("-i" | "--input") => input = Some(value(f)); i += 2
         case f @ ("-o" | "--output") => output = Some(value(f)); i += 2
-        case f @ ("-c" | "--concurrency") => concurrency = value(f); i += 2
+        case f @ ("-c" | "--concurrency") =>
+          concurrency = value(f).toInt; i += 2
         case f @ ("-b" | "--batch-size") => value(f); i += 2 // dissolved
         case "--no-relationships" => relationships = false; i += 1
         case "--examples" => examples = true; i += 1
@@ -70,22 +71,17 @@ object Main {
     // reuse an already-running session (e.g. under test) and leave its
     // lifecycle alone; stop only a session this run created
     val preExisting = SparkSession.getDefaultSession.isDefined
-    val spark = SparkSession.builder()
-      .master(s"local[$concurrency]")
-      .appName("graft-convert")
-      .config("spark.sql.shuffle.partitions", concurrency)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$concurrency]", Some(concurrency))
     // -v mirrors main.rb's verbose progress logging via Spark's own
     // job/stage logs
     spark.sparkContext.setLogLevel(if (verbose) "INFO" else "WARN")
 
     val adapters =
-      if (examples) Converter.allAdapters else Converter.coreAdapters
+      if (!relationships) Nil
+      else if (examples) Converter.allAdapters
+      else Converter.coreAdapters
     val parseFailures = spark.sparkContext.longAccumulator("parse_failures")
-    val tables = new Converter(spark, adapters, relationships,
-      Some(parseFailures))
+    val tables = new Converter(spark, adapters, Some(parseFailures))
       .convertAndWrite(in, out)
 
     // stats printout (main.rb:124-142) — one aggregate pass per table:

@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.ingest.XmlIngest
+import graft.ingest.{LastWriteWins, XmlIngest}
 import graft.relationships._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -78,15 +78,15 @@ object GraphTables {
   * dedup replaces the fiber pipeline; the adapter list is the same
   * configuration surface the reference exposes
   * (main.rb:109-115, examples/custom_main.rb:10-42), defaulting to the
-  * two core adapters. The whole run is two Spark jobs (ingest,
-  * relationship derivation) — transactions, WAL, queues and VACUUM all
-  * dissolve into immutable DataFrames + atomic job commits
-  * (SURVEY.md §3.1, §4.2).
+  * two core adapters; `Nil` disables detection (main.rb:42's
+  * `--no-relationships`) and leaves cross_references empty. The whole
+  * run is two Spark jobs (ingest, relationship derivation) —
+  * transactions, WAL, queues and VACUUM all dissolve into immutable
+  * DataFrames + atomic job commits (SURVEY.md §3.1, §4.2).
   */
 class Converter(
     spark: SparkSession,
     adapters: Seq[RelationshipAdapter] = Converter.coreAdapters,
-    detectRelationships: Boolean = true,
     parseFailures: Option[org.apache.spark.util.LongAccumulator] = None) {
 
   def convert(inputDir: String): GraphTables = {
@@ -94,12 +94,8 @@ class Converter(
     // Ingest tables feed every adapter and the final write; cache once.
     val nodes = t.nodes.cache()
     val properties = t.properties.cache()
-    val xrefs =
-      if (detectRelationships)
-        RelationshipAdapter.detectAll(adapters, nodes, properties)
-      else
-        RelationshipAdapter.detectAll(Nil, nodes, properties)
-    GraphTables(t.documents, nodes, properties, xrefs)
+    GraphTables(t.documents, nodes, properties,
+      RelationshipAdapter.detectAll(adapters, nodes, properties))
   }
 
   def convertAndWrite(inputDir: String, outDir: String): GraphTables = {
@@ -140,47 +136,28 @@ class Converter(
     * table keeps orphans of evicted nodes, exactly as SQLite does with
     * foreign_keys OFF during writes. */
   def upsert(prev: GraphTables, inputDir: String): GraphTables = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.{col, lit}
+    import LastWriteWins.{Documents, Nodes, Properties}
     val t2 = XmlIngest.ingest(spark, inputDir, parseFailures)
 
-    // Last-write-wins across batches with the same max_by shape as
-    // ingest's intra-batch dedup (XmlIngest.tables): batch rank is the
-    // arrival order — the new conversion strictly follows the old one.
-    def lastBatchWins(old: DataFrame, fresh: DataFrame,
-        keys: Seq[org.apache.spark.sql.Column]): DataFrame = {
-      val u = old.withColumn("batch", lit(0))
-        .unionByName(fresh.withColumn("batch", lit(1)))
-      val payload = struct(old.columns.map(col).toIndexedSeq: _*)
-      u.groupBy(keys: _*).agg(max_by(payload, col("batch")).as("w"))
-        .select(col("w.*"))
-    }
+    // The new conversion strictly follows the old one: batch rank is
+    // the arrival order on every replace key.
+    def merge(table: LastWriteWins.Table, old: DataFrame,
+        fresh: DataFrame): DataFrame =
+      LastWriteWins(table, old.withColumn("_batch", lit(0))
+        .unionByName(fresh.withColumn("_batch", lit(1))), col("_batch"))
+        .drop("_batch")
 
-    val documents = lastBatchWins(prev.documents, t2.documents,
-      Seq(col("id")))
-    val byId = lastBatchWins(prev.nodes, t2.nodes, Seq(col("id")))
-    // UNIQUE(parent_id, position) with SQLite's multi-NULL exemption:
-    // null-parent rows each keep their own slot (third key = id). The
-    // slot pass re-ranks the id-survivors by batch: rows whose id came
-    // from the new conversion win their slots, evicting previous-batch
-    // occupants — the reference's INSERT OR REPLACE eviction.
-    val nodes = lastBatchWins(
-      byId.join(t2.nodes.select(col("id")), Seq("id"), "left_anti"),
-      byId.join(t2.nodes.select(col("id")), Seq("id"), "left_semi"),
-      Seq(col("parent_id"), col("position"),
-        when(col("parent_id").isNull, col("id"))))
+    val documents = merge(Documents, prev.documents, t2.documents)
+    val nodes = merge(Nodes, prev.nodes, t2.nodes).cache()
+    val properties = merge(Properties, prev.properties, t2.properties)
       .cache()
-    val properties = lastBatchWins(prev.properties, t2.properties,
-      Seq(col("node_id"), col("property_name"))).cache()
 
     // Detection sees only surviving nodes' properties (np JOIN nodes);
     // the stored table above keeps orphans like the reference does.
     val liveProps = properties.join(nodes.select(col("id")),
       properties("node_id") === nodes("id"), "left_semi")
-    val fresh =
-      if (detectRelationships)
-        RelationshipAdapter.detectAll(adapters, nodes, liveProps)
-      else
-        RelationshipAdapter.detectAll(Nil, nodes, liveProps)
+    val fresh = RelationshipAdapter.detectAll(adapters, nodes, liveProps)
     val xrefs = prev.crossReferences.unionByName(fresh).distinct()
     GraphTables(documents, nodes, properties, xrefs)
   }

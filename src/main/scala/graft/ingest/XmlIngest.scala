@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.model._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayInputStream
@@ -16,8 +16,8 @@ import scala.collection.mutable
   * fiber producer/consumer feeding a single SQLite writer, every file is
   * parsed as one row of Spark's `binaryFile` source and DOM-walked inside
   * `mapPartitions`; the per-document node/property sequences are exploded
-  * into columnar tables and duplicate keys resolved with a deterministic
-  * last-write-wins window (the reference's `INSERT OR REPLACE`,
+  * into columnar tables and duplicate keys resolved by the deterministic
+  * [[LastWriteWins]] rule (the reference's `INSERT OR REPLACE`,
   * database_writer.rb:46-61). At cluster scale each file is an
   * independent task input — no shared writer, no queue, no transaction
   * machinery; the atomic Spark job commit replaces batch commits.
@@ -80,13 +80,26 @@ object XmlIngest {
       }
   }
 
+  /** The one parser configuration both parsers share (the strict DOM
+    * builder and the SAX [[salvageParse]] replay): untrusted input never
+    * reads local files or fetches URLs — no external DTD, no external
+    * general or parameter entities, as under Nokogiri's default options
+    * — and secure processing keeps the JDK's entity-expansion limit,
+    * which stops billion-laughs. Internal DTD entities still decode, so
+    * DOCTYPEs are not disallowed outright. */
+  private def harden(setFeature: (String, Boolean) => Unit): Unit = Seq(
+    javax.xml.XMLConstants.FEATURE_SECURE_PROCESSING -> true,
+    "http://apache.org/xml/features/nonvalidating/load-external-dtd" -> false,
+    "http://xml.org/sax/features/external-general-entities" -> false,
+    "http://xml.org/sax/features/external-parameter-entities" -> false
+  ).foreach { case (feature, on) => setFeature(feature, on) }
+
   private def newBuilder(): javax.xml.parsers.DocumentBuilder = {
     val factory = DocumentBuilderFactory.newInstance()
     factory.setNamespaceAware(false)
     factory.setCoalescing(true)
     factory.setIgnoringComments(true)
-    factory.setFeature(
-      "http://apache.org/xml/features/nonvalidating/load-external-dtd", false)
+    harden(factory.setFeature)
     factory.newDocumentBuilder()
   }
 
@@ -108,9 +121,7 @@ object XmlIngest {
     val doc = builder.newDocument()
     val factory = javax.xml.parsers.SAXParserFactory.newInstance()
     factory.setNamespaceAware(false)
-    factory.setFeature(
-      "http://apache.org/xml/features/nonvalidating/load-external-dtd",
-      false)
+    harden(factory.setFeature)
     val parser = factory.newSAXParser()
     val handler = new org.xml.sax.helpers.DefaultHandler {
       private var stack: List[Element] = Nil
@@ -286,67 +297,34 @@ object XmlIngest {
       properties: DataFrame)
 
   /** Explode the per-document IR into the three public tables, applying
-    * `INSERT OR REPLACE` key semantics: for each primary key the *last*
-    * written row wins, where arrival order is made deterministic as
-    * (filename, within-file document order) — see SURVEY.md §7.4. */
+    * `INSERT OR REPLACE` key semantics ([[LastWriteWins]]): for each
+    * replace key the *last* written row wins, where arrival order is
+    * made deterministic as (filename, within-file document order) — see
+    * SURVEY.md §7.4. */
   def tables(parsedInput: Dataset[ParsedDocument]): XmlTables = {
     val spark = parsedInput.sparkSession
     import spark.implicits._
+    import LastWriteWins.{Documents, Nodes, Properties}
     // Three tables derive from one parse — cache the IR so the DOM walk
     // runs once per file, not once per output table.
     val parsed = parsedInput.cache()
 
-    // Last-write-wins as a max_by hash aggregate, not a row_number
-    // window: the aggregate partially combines map-side, so at scale
-    // each shuffle moves ~one candidate row per key per map task,
-    // where the window form shuffles every duplicate row and then
-    // sorts each partition. Arrival order is the deterministic
-    // (filename, within-file document order) — see SURVEY.md §7.4.
-    def latest(df: DataFrame, keys: Seq[org.apache.spark.sql.Column],
-        ord: org.apache.spark.sql.Column): DataFrame =
-      df.groupBy(keys: _*)
-        .agg(max_by(struct(df.columns.map(col).toIndexedSeq: _*), ord)
-          .as("w"))
-        .select($"w.*")
-
-    val documents = latest(parsed.select($"document.*"),
-      Seq($"id"), $"filename")
+    val documents = LastWriteWins(Documents, parsed.select($"document.*"),
+      $"filename")
       .select($"id", $"filename", $"file_hash", $"file_size",
         current_timestamp().as("parsed_at"))
 
     val arrival = struct($"filename", $"ordinal")
-
-    // Two replace keys: PK (id), then UNIQUE(parent_id, position)
-    // (001_create_base_schema.rb:29; null parents are exempt, matching
-    // SQLite's multi-NULL semantics). Semantics are *set-based*: a
-    // surviving row is the last arrival for its id AND the last among
-    // the id-survivors for its (parent_id, position). This diverges
-    // from SQLite's row-at-a-time INSERT OR REPLACE in one corner: if a
-    // middle arrival deletes an earlier row via the UNIQUE constraint
-    // and is later itself replaced via the PK, SQLite leaves that
-    // (parent, position) slot empty, whereas the set form keeps the
-    // earlier row (it is the last id-survivor for the slot). The
-    // declarative form is order-independent and scale-stable — pinned
-    // by IngestSpec "double-conflict interleaving".
-    //
-    // The UNIQUE pass exempts null parents by giving each null-parent
-    // row its own group (third key = id when parent is null) — one
-    // aggregation, no filtered-union re-scan of the PK pass's output.
-    val byId = latest(
+    val nodes = LastWriteWins(Nodes,
       parsed.select($"document.filename", explode($"nodes").as("n"))
-        .select($"filename", $"n.*"),
-      Seq($"id"), arrival)
-    val nodes = latest(byId,
-      Seq($"parent_id", $"position",
-        when($"parent_id".isNull, $"id").as("null_slot")), arrival)
+        .select($"filename", $"n.*"), arrival)
       .select($"id", $"node_type", $"document_id", $"parent_id",
         $"position", $"content", $"xpath",
         current_timestamp().as("created_at"))
 
-    val properties = latest(
+    val properties = LastWriteWins(Properties,
       parsed.select($"document.filename", explode($"properties").as("p"))
-        .select($"filename", $"p.*"),
-      Seq($"node_id", $"property_name"), arrival)
+        .select($"filename", $"p.*"), arrival)
       .select($"node_id", $"property_name", $"property_value", $"data_type",
         $"document_id")
 
@@ -376,4 +354,61 @@ object XmlIngest {
       failures: Option[org.apache.spark.util.LongAccumulator] = None)
       : XmlTables =
     tables(parse(spark, inputDir, failures))
+}
+
+/** The reference's `INSERT OR REPLACE` (database_writer.rb:46-61) as
+  * one set-based rule — the single owner of the property-graph replace
+  * keys. Batch ingest ([[XmlIngest.tables]]), cross-conversion upsert
+  * (`Converter.upsert`) and stream compaction
+  * (`XmlStreamIngest.compact`) all resolve through it and differ only
+  * in the arrival order they supply: (filename, within-file document
+  * order) for ingest, batch rank for upsert, micro-batch id for
+  * compaction. */
+object LastWriteWins {
+
+  sealed trait Table
+  case object Documents extends Table
+  case object Nodes extends Table
+  case object Properties extends Table
+
+  /** Keep, per replace key of `table`, the row with the greatest
+    * `arrival` (an expression over `rows`' columns; every column,
+    * `arrival`'s inputs included, is kept in the output).
+    *
+    * Keys: documents on PK `id`; properties on (node_id,
+    * property_name); nodes on PK `id` and then UNIQUE(parent_id,
+    * position) (001_create_base_schema.rb:29), with null parents
+    * exempt, matching SQLite's multi-NULL semantics: each null-parent
+    * row gets its own group (third key = id when parent is null) — one
+    * aggregation, no filtered-union re-scan of the PK pass's output.
+    *
+    * Node semantics are *set-based*: a surviving row is the last
+    * arrival for its id AND the last among the id-survivors for its
+    * (parent_id, position). This diverges from SQLite's row-at-a-time
+    * INSERT OR REPLACE in one corner: if a middle arrival deletes an
+    * earlier row via the UNIQUE constraint and is later itself replaced
+    * via the PK, SQLite leaves that slot empty, whereas the set form
+    * keeps the earlier row (it is the last id-survivor for the slot).
+    * The declarative form is order-independent and scale-stable —
+    * pinned by IngestSpec "double-conflict interleaving".
+    *
+    * Last-write-wins is a max_by hash aggregate, not a row_number
+    * window: the aggregate partially combines map-side, so at scale
+    * each shuffle moves ~one candidate row per key per map task, where
+    * the window form shuffles every duplicate row and then sorts each
+    * partition. */
+  def apply(table: Table, rows: DataFrame, arrival: Column): DataFrame = {
+    def latest(df: DataFrame, keys: Column*): DataFrame =
+      df.groupBy(keys: _*)
+        .agg(max_by(struct(df.columns.map(col).toIndexedSeq: _*), arrival)
+          .as("w"))
+        .select(col("w.*"))
+    table match {
+      case Documents => latest(rows, col("id"))
+      case Properties => latest(rows, col("node_id"), col("property_name"))
+      case Nodes =>
+        latest(latest(rows, col("id")), col("parent_id"), col("position"),
+          when(col("parent_id").isNull, col("id")).as("null_slot"))
+    }
+  }
 }

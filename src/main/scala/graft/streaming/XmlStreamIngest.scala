@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ingest.XmlIngest
+import graft.ingest.{LastWriteWins, XmlIngest}
 import graft.model.ParsedDocument
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -17,11 +17,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * exact same parse → explode → dedup stages as the batch ingest and
   * appends to the parquet tables via `foreachBatch`.
   *
-  * Append semantics: last-write-wins holds within a micro-batch (same
-  * window dedup as batch ingest); across batches the parquet tables
-  * accumulate one version per batch and readers resolve keys with the
-  * same deterministic rule — or a periodic compaction job rewrites
-  * them (the streaming-upsert pattern for immutable object stores). */
+  * Append semantics: last-write-wins holds within a micro-batch (the
+  * batch ingest's own [[graft.ingest.LastWriteWins]] resolution);
+  * across batches the parquet tables accumulate one version per batch
+  * and [[compact]] resolves keys with the same rule, the micro-batch id
+  * as arrival order (the streaming-upsert pattern for immutable object
+  * stores). */
 object XmlStreamIngest {
 
   /** Streaming per-file parse: one [[ParsedDocument]] per discovered
@@ -95,34 +96,23 @@ object XmlStreamIngest {
       .start()
 
   /** Cross-batch key resolution: within a batch the tables are already
-    * deduplicated; across batches the highest `_batch` wins per key
-    * (INSERT OR REPLACE arrival order). Writes clean tables (no
-    * `_batch`) under `outDir/compacted` — the periodic-compaction leg
-    * of the streaming-upsert pattern for immutable stores. Reads with
-    * mergeSchema=true so output dirs whose early batches predate a
-    * column addition (e.g. documents.file_hash) union to the widest
-    * schema instead of silently taking one footer's view. */
+    * deduplicated; across batches the highest `_batch` wins per replace
+    * key ([[graft.ingest.LastWriteWins]], the INSERT OR REPLACE arrival
+    * order). Writes clean tables (no `_batch`) under `outDir/compacted`
+    * — the periodic-compaction leg of the streaming-upsert pattern for
+    * immutable stores. Reads with mergeSchema=true so output dirs whose
+    * early batches predate a column addition (e.g. documents.file_hash)
+    * union to the widest schema instead of silently taking one footer's
+    * view. */
   def compact(spark: SparkSession, outDir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    def lastWins(df: org.apache.spark.sql.DataFrame,
-        keys: Seq[String]): org.apache.spark.sql.DataFrame =
-      df.withColumn("_rn", row_number().over(
-          Window.partitionBy(keys.map(col): _*)
-            .orderBy(col("_batch").desc)))
-        .filter(col("_rn") === 1)
-        .drop("_rn")
-    def write(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-      df.drop("_batch").write.mode("overwrite")
-        .parquet(s"$outDir/compacted/$name")
-    write(lastWins(spark.read.option("mergeSchema", "true").parquet(s"$outDir/documents"), Seq("id")),
-      "documents")
-    // nodes obey BOTH replace keys, like the batch ingest: PK id, then
-    // UNIQUE(parent_id, position) for non-null parents
-    val byId = lastWins(spark.read.option("mergeSchema", "true").parquet(s"$outDir/nodes"), Seq("id"))
-    val byPos = lastWins(byId.filter(col("parent_id").isNotNull),
-      Seq("parent_id", "position"))
-    write(byPos.unionByName(byId.filter(col("parent_id").isNull)), "nodes")
-    write(lastWins(spark.read.option("mergeSchema", "true").parquet(s"$outDir/node_properties"),
-      Seq("node_id", "property_name")), "node_properties")
+    import LastWriteWins.{Documents, Nodes, Properties}
+    Seq(Documents -> "documents", Nodes -> "nodes",
+      Properties -> "node_properties").foreach { case (table, name) =>
+      LastWriteWins(table,
+        spark.read.option("mergeSchema", "true").parquet(s"$outDir/$name"),
+        col("_batch"))
+        .drop("_batch")
+        .write.mode("overwrite").parquet(s"$outDir/compacted/$name")
+    }
   }
 }

@@ -256,7 +256,7 @@ class AdapterSpec extends SparkSpec {
       """<?xml version="1.0"?><root id="root_node"><child id="child_1">Content</child></root>"""
     val dir = Files.createTempDirectory("graft-disabled").toFile
     Files.write(new java.io.File(dir, "d.xml").toPath, xml.getBytes(UTF_8))
-    val t = new Converter(spark, detectRelationships = false)
+    val t = new Converter(spark, adapters = Nil)
       .convert(dir.getAbsolutePath)
     assert(t.crossReferences.count() === 0)
   }

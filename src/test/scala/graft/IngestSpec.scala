@@ -196,6 +196,78 @@ class IngestSpec extends SparkSpec {
     assert(p.nodes.find(_.id == "item_500").get.xpath === "/root/item[500]")
   }
 
+  // --- untrusted input: no file or network reads, bounded expansion ---
+
+  /** Every string cell of the three ingest tables. */
+  private def cells(t: XmlIngest.XmlTables): Seq[String] =
+    Seq(t.documents, t.nodes, t.properties).flatMap(
+      _.collect().toSeq.flatMap(_.toSeq.collect { case s: String => s }))
+
+  test("external entities never resolve: no file: or http: text reaches a table") {
+    val dir = Files.createTempDirectory("graft-xxe")
+    val canary = s"CANARY_${java.util.UUID.randomUUID()}"
+    // not *.xml, so the scan itself never lists it
+    val secret = Files.write(dir.resolve("secret.txt"), canary.getBytes(UTF_8))
+    val hits = new java.util.concurrent.atomic.AtomicInteger
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", { ex: com.sun.net.httpserver.HttpExchange =>
+      hits.incrementAndGet()
+      val body = canary.getBytes(UTF_8)
+      ex.sendResponseHeaders(200, body.length.toLong)
+      ex.getResponseBody.write(body)
+      ex.close()
+    })
+    server.start()
+    val http = s"http://127.0.0.1:${server.getAddress.getPort}"
+    try {
+      Files.write(dir.resolve("file.xml"),
+        s"""<?xml version="1.0"?><!DOCTYPE root [<!ENTITY e SYSTEM "${secret.toUri}">]><root id="file_root"><item id="file_item">before &e; after</item></root>"""
+          .getBytes(UTF_8))
+      Files.write(dir.resolve("http.xml"),
+        s"""<?xml version="1.0"?><!DOCTYPE root [<!ENTITY h SYSTEM "$http/general"><!ENTITY % p SYSTEM "$http/parameter"> %p;]><root id="http_root"><item id="http_item">before &h; after</item></root>"""
+          .getBytes(UTF_8))
+      val t = XmlIngest.ingest(spark, dir.toString)
+      assert(!cells(t).exists(_.contains(canary)))
+      assert(hits.get === 0)
+      // the documents still convert, minus the entity text
+      import spark.implicits._
+      val content = t.nodes.select($"id", $"content").as[(String, String)]
+        .collect().toMap
+      assert(content.keySet ===
+        Set("file_root", "file_item", "http_root", "http_item"))
+      assert(content("file_item").startsWith("before"))
+      assert(content("file_item").endsWith("after"))
+    } finally server.stop(0)
+  }
+
+  test("internal DTD entities and predefined ones still decode") {
+    val p = parseString("internal.xml",
+      """<?xml version="1.0"?><!DOCTYPE root [<!ENTITY who "World">]><root id="r"><item id="i" greet="Hello &who;">Hello &who; &amp; all</item></root>""").get
+    assert(p.nodes.find(_.id == "i").get.content === Some("Hello World & all"))
+    assert(p.properties.find(_.node_id == "i").get.property_value ===
+      "Hello World")
+  }
+
+  test("billion laughs is skipped or salvaged without failing the job") {
+    val dir = Files.createTempDirectory("graft-lol")
+    val levels = (1 to 9).map(i =>
+      s"""<!ENTITY lol$i "${s"&lol${i - 1};" * 10}">""").mkString
+    Files.write(dir.resolve("lol.xml"),
+      s"""<?xml version="1.0"?><!DOCTYPE lolz [<!ENTITY lol0 "lol">$levels]><lolz id="bomb">&lol9;</lolz>"""
+        .getBytes(UTF_8))
+    Files.copy(Paths.get(s"$fixturesDir/simple.xml"), dir.resolve("simple.xml"))
+    import spark.implicits._
+    val t = XmlIngest.ingest(spark, dir.toString)
+    assert(t.documents.select($"id").as[String].collect().contains("simple"))
+    assert(t.nodes.filter($"document_id" === "simple").count() === 4)
+    // 10^9 "lol"s never materialize: the expansion limit stops the
+    // strict parse, and whatever salvage keeps stays small
+    val bomb = t.nodes.filter($"id" === "bomb").select($"content")
+      .as[String].collect()
+    assert(bomb.forall(_.length < 1000000), bomb.map(_.length).toSeq)
+  }
+
   // --- distributed table semantics ---
 
   test("duplicate ids: last write wins (:38-56)") {

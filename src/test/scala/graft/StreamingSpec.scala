@@ -268,6 +268,60 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("stream + compact of two batches equals convert + upsert") {
+    import java.nio.file.Files
+    import graft.streaming.XmlStreamIngest
+    val root = Files.createTempDirectory("graft-stream-upsert")
+    val in = Files.createDirectories(root.resolve("in"))
+    // each batch appears as one directory rename, so the file source
+    // discovers it whole, in one micro-batch
+    def land(fixtures: String, name: String): Unit = {
+      val staged = Files.createDirectories(root.resolve(s"staged_$name"))
+      new java.io.File(fixtures).listFiles().foreach { f =>
+        Files.copy(f.toPath, staged.resolve(f.getName))
+      }
+      Files.move(staged, in.resolve(name)); ()
+    }
+    val out = root.resolve("out").toString
+    val q = XmlStreamIngest.run(spark, in.toString, out,
+      root.resolve("ckpt").toString,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0))
+    try {
+      land(fixturesDir, "base")
+      q.processAllAvailable()
+      land(graft.queries.XmlQueries.updateDir, "patch")
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.read.parquet(s"$out/nodes").select($"_batch").distinct()
+      .count() === 2)
+    XmlStreamIngest.compact(spark, out)
+
+    val converter = new graft.engine.Converter(spark, Nil)
+    val upserted = converter.upsert(
+      converter.convert(in.resolve("base").toString),
+      in.resolve("patch").toString)
+
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(String.valueOf).mkString("\u0000")).toSeq.sorted
+    def compacted(name: String) =
+      spark.read.parquet(s"$out/compacted/$name")
+    val docCols = Seq("id", "filename", "file_hash", "file_size")
+    assert(rows(compacted("documents"), docCols: _*) ===
+      rows(upserted.documents, docCols: _*))
+    val nodeCols = Seq("id", "node_type", "document_id", "parent_id",
+      "position", "content", "xpath")
+    assert(rows(compacted("nodes"), nodeCols: _*) ===
+      rows(upserted.nodes, nodeCols: _*))
+    val propCols = Seq("node_id", "property_name", "property_value",
+      "data_type", "document_id")
+    assert(rows(compacted("node_properties"), propCols: _*) ===
+      rows(upserted.properties, propCols: _*))
+    // the patch's sibling-slot eviction happened on both paths
+    val ids = compacted("nodes").select($"id").as[String].collect().toSet
+    assert(!ids("book_1") && ids("pamphlet_1"))
+  }
+
   test("compaction merges mixed-schema batches from before a column addition") {
     // an output dir whose early batches predate the documents
     // file_hash column: compact must surface the widest schema (old
